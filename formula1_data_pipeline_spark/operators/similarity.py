@@ -514,6 +514,17 @@ def train_ivf_centroids(
     if not cent:  # empty corpus — nothing to train
         return coefs_df()
     dim = max(len(v) for v in cent.values())
+    # fixed-dim input is the contract: zip_with NULL-pads a shorter
+    # vector, its score goes -Infinity and every ragged row would land
+    # in the lowest cluster — fail loudly instead (one pass, up front)
+    ragged = base.filter(
+        F.col("id").isNotNull() & F.col("vec").isNotNull()
+        & (F.size("vec") != dim)
+    ).limit(1).collect()
+    if ragged:
+        raise ValueError(
+            f"train_ivf_centroids: {vec_col} of {id_col}={ragged[0]['id']!r}"
+            f" has {len(ragged[0]['vec'])} dims, expected {dim}")
     neg_inf = "CAST('-Infinity' AS DOUBLE)"
 
     def dlit(x: float) -> str:

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from formula1_data_pipeline_spark.functions.cleaning import (
@@ -374,23 +374,28 @@ def fct_driver_laps(deps: Mapping[str, DataFrame]) -> DataFrame:
     return deps["int_driver_lap_features"].select(*_FCT_LAP_COLS)
 
 
+def _race_summary_cols() -> list[tuple[str, Column]]:
+    """The aggregate list (A1-A3) shared by fct_driver_race_summary.sql:
+    7-30 and final_f1.sql:37-63 (byte-equivalent in the reference)."""
+    return [
+        ("first_lap", F.min("lap_number")),
+        ("last_lap", F.max("lap_number")),
+        ("best_position", F.min("race_position")),
+        ("worst_position", F.max("race_position")),
+        ("best_lap_time", F.min("lap_time")),
+        ("avg_lap_time", F.avg("lap_time")),
+        ("avg_psi", F.avg("pace_stability_index")),
+        ("avg_degradation", F.avg("degradation_index")),
+        ("avg_performance_score", F.avg("performance_score_raw")),
+        ("pit_stop_count",
+         F.sum(F.when(F.col("is_pit_out_lap"), 1).otherwise(0))),
+    ]
+
+
 def _race_summary_agg(laps: DataFrame) -> DataFrame:
-    """Shared GROUP BY (A1-A3) of fct_driver_race_summary.sql:7-30 and
-    final_f1.sql:37-63 (byte-equivalent aggregate list)."""
+    """Per-(meeting, session, driver) GROUP BY of the summary list."""
     return laps.groupBy(*_SESSION_DRIVER).agg(
-        F.min("lap_number").alias("first_lap"),
-        F.max("lap_number").alias("last_lap"),
-        F.min("race_position").alias("best_position"),
-        F.max("race_position").alias("worst_position"),
-        F.min("lap_time").alias("best_lap_time"),
-        F.avg("lap_time").alias("avg_lap_time"),
-        F.avg("pace_stability_index").alias("avg_psi"),
-        F.avg("degradation_index").alias("avg_degradation"),
-        F.avg("performance_score_raw").alias("avg_performance_score"),
-        F.sum(
-            F.when(F.col("is_pit_out_lap"), 1).otherwise(0)
-        ).alias("pit_stop_count"),
-    )
+        *[agg.alias(name) for name, agg in _race_summary_cols()])
 
 
 @REGISTRY.register("fct_driver_race_summary", refs=("int_driver_lap_features",),
@@ -407,8 +412,18 @@ def fct_driver_race_summary(deps: Mapping[str, DataFrame]) -> DataFrame:
                    stats_cols=("session_key",))
 def final_f1(deps: Mapping[str, DataFrame]) -> DataFrame:
     """final_f1.sql: per-lap detail LEFT JOIN its own session summary
-    (J2, :65-83). The summary side is tiny (one row per driver-session)
-    — broadcast it so the detail side never shuffles."""
-    laps = deps["int_driver_lap_features"].select(*_FCT_LAP_COLS)
-    agg = _race_summary_agg(deps["int_driver_lap_features"])
-    return laps.join(F.broadcast(agg), _SESSION_DRIVER, "left")
+    (J2, :65-83), computed as window aggregates over the (meeting,
+    session, driver) partition (SURVEY.md J2 idiom). A self-join reads
+    the feature chain twice, and on session-partitioned raw tables
+    dynamic partition pruning copies that chain into the summary side
+    as subqueries. NULL-key rows never match the LEFT JOIN, so they get
+    NULL summary columns."""
+    w = Window.partitionBy(*_SESSION_DRIVER)
+    keyed = F.col(_SESSION_DRIVER[0]).isNotNull()
+    for k in _SESSION_DRIVER[1:]:
+        keyed = keyed & F.col(k).isNotNull()
+    return deps["int_driver_lap_features"].select(
+        *_FCT_LAP_COLS,
+        *[F.when(keyed, agg.over(w)).alias(name)
+          for name, agg in _race_summary_cols()],
+    )

@@ -99,6 +99,25 @@ def get_spark(
         #     Spark's parquet reader rejects; read as long and convert
         #     (queries.load truncates to micros, matching DuckDB's cast).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # --- generated-class cache (static conf, JVM-wide). Spark keeps
+        #     100 compiled classes by default, but one op of this
+        #     package needs more: with an unbounded cache a season
+        #     rebuild (realtime reload + 15-model run + assertion report
+        #     + mart reads) used ~355 distinct classes, a corpus dedup
+        #     op (exact + MinHash-LSH + near-dup clusters) ~170, the
+        #     lazy registry pipeline on the test fixtures ~290. At 100
+        #     entries every rerun of the same plans evicted and
+        #     recompiled them (~340 / ~145 / ~330 compiles per op at
+        #     ~25 ms each). 1000 covers the union with headroom; reruns
+        #     then compile nothing.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        #     The cache is keyed by generated source, which by default
+        #     names its class after the plan's codegen stage id. AQE
+        #     numbers stages in the order it re-plans them, which
+        #     follows stage completion timing, so an identical plan
+        #     could still miss and recompile ~10 classes on an
+        #     occasional rerun; without the id it always hits.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # --- managed tables (bucketed layouts) land in tmp, not cwd;
         #     static conf, so it must be set at session build.
         .config(

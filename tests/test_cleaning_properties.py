@@ -102,3 +102,33 @@ def test_parsers_match_reference_semantics(spark, values):
         assert got[i]["clean"] == c, (v, "scrub")
         assert got[i]["gap"] == ref_parse_lap_gap(c), (v, "gap")
         assert got[i]["int_str"] == ref_to_int_or_none(c), (v, "int")
+
+
+def test_scrub_dataframe_quotes_names_and_keeps_schema(spark):
+    """The whole-frame scrub is one SQL projection: column names with a
+    space or a backtick must round-trip, typed columns pass through,
+    and every string column scrubs exactly like clean_null_sentinels."""
+    from formula1_data_pipeline_spark.functions.cleaning import scrub_dataframe
+
+    schema = T.StructType([
+        T.StructField("lap no", T.IntegerType()),
+        T.StructField("odd`name", T.StringType()),
+        T.StructField("plain", T.StringType()),
+    ])
+    values = [*NULL_SENTINELS, "  None ", "44", " x ", None]
+    df = spark.createDataFrame(
+        [(i, v, v) for i, v in enumerate(values)], schema)
+    out = scrub_dataframe(df)
+    assert out.schema == T.StructType([
+        T.StructField("lap no", T.IntegerType()),
+        T.StructField("odd`name", T.StringType()),
+        T.StructField("plain", T.StringType()),
+    ])
+    ref = df.select(
+        "`lap no`",
+        clean_null_sentinels(F.col("`odd``name`")).alias("a"),
+        clean_null_sentinels(F.col("plain")).alias("b"),
+    ).collect()
+    got = out.collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in ref]
+    assert [r[1] for r in got] == [ref_scrub(v) for v in values]

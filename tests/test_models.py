@@ -189,6 +189,72 @@ def test_final_f1_detail_plus_summary(built_models):
     assert r["avg_lap_time"] is not None
 
 
+def _final_f1_join_reference(feats):
+    """final_f1.sql's literal J2 shape: lap detail LEFT JOIN its own
+    GROUP BY summary — the form the window-aggregate model replaced."""
+    from formula1_data_pipeline_spark.plans.models import (
+        _FCT_LAP_COLS,
+        _SESSION_DRIVER,
+        _race_summary_agg,
+    )
+
+    return feats.select(*_FCT_LAP_COLS).join(
+        F.broadcast(_race_summary_agg(feats)), _SESSION_DRIVER, "left")
+
+
+def test_final_f1_windows_match_join_reference(built_models):
+    """The window form must equal the LEFT JOIN form: same columns,
+    order and types, same rows — including NULL-key rows, which never
+    match the join and so carry NULL summary columns."""
+    from formula1_data_pipeline_spark.plans.models import final_f1
+
+    feats = built_models["int_driver_lap_features"]
+    null_key = feats.orderBy("session_key", "driver_number", "lap_number") \
+        .limit(2).withColumn("session_key", F.lit(None).cast("int"))
+    feats = feats.unionByName(null_key)
+
+    got = final_f1({"int_driver_lap_features": feats})
+    ref = _final_f1_join_reference(feats)
+    assert got.schema == ref.schema
+
+    # doubles rounded as q43's oracle does (accumulation order may
+    # differ between a window and a hash aggregate)
+    def canon(df):
+        return df.select(*[
+            F.round(c, 9).alias(c) if t == "double" else F.col(c)
+            for c, t in df.dtypes
+        ])
+
+    assert canon(got).exceptAll(canon(ref)).count() == 0
+    assert canon(ref).exceptAll(canon(got)).count() == 0
+    nulls = got.filter(F.col("session_key").isNull()).collect()
+    assert len(nulls) == 2
+    assert all(r["first_lap"] is None and r["pit_stop_count"] is None
+               for r in nulls)
+
+
+def test_final_f1_plan_scans_no_more_than_fct_driver_laps(spark, raw_tables,
+                                                          tmp_path):
+    """On session-partitioned raw tables the old self-join let dynamic
+    partition pruning copy the whole feature chain into the summary
+    side as subqueries (24 parquet scans vs 4). final_f1 must read its
+    inputs no more often than fct_driver_laps, its projection."""
+    from formula1_data_pipeline_spark.plans.models import REGISTRY
+    from formula1_data_pipeline_spark.sources.txn import read_table, txn_append
+
+    src = {}
+    for name, df in raw_tables.items():
+        txn_append(spark, df, str(tmp_path / name), key="session_key")
+        src[name] = read_table(spark, str(tmp_path / name))
+    built = REGISTRY.run(spark, src)
+
+    def scans(model):
+        plan = built[model]._jdf.queryExecution().executedPlan().toString()
+        return plan.count("FileScan parquet")
+
+    assert 0 < scans("final_f1") <= scans("fct_driver_laps")
+
+
 def test_race_control_chain(built_models):
     rc = built_models["int_openf1_race_control_all"]
     # dropped null-session row gone; dup message deduped with rt winning

@@ -273,6 +273,27 @@ def test_lloyd_training_carries_empty_clusters_forward(spark):
     assert all(r["count"] == 2 for r in got)  # dim rows per cluster
 
 
+def test_lloyd_training_rejects_ragged_vectors(spark):
+    """Fixed-dim input is the trainer's contract: a vector shorter or
+    longer than the centroid dim would score -Infinity against every
+    centroid and silently land in cluster 0, so it must raise."""
+    import pytest
+
+    from formula1_data_pipeline_spark.operators.similarity import (
+        train_ivf_centroids,
+    )
+
+    rows = [(i, [1.0, float(i), 0.5]) for i in range(6)]
+    rows.append((6, [1.0, 2.0]))  # ragged
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="vec_id=6 has 2 dims, expected 3"):
+        train_ivf_centroids(emb, n_centroids=2, n_iter=1,
+                            id_col="vec_id", vec_col="embedding")
+    ok = train_ivf_centroids(emb.filter("vec_id != 6"), n_centroids=2,
+                             n_iter=1, id_col="vec_id", vec_col="embedding")
+    assert ok.count() == 2 * 3
+
+
 def test_semantic_dedup_accepts_pretrained_quantizer(spark):
     """Round 8: semantic_dedup(centroid_coefs=...) must route the
     assignment through the supplied quantizer. Passing the SAME
